@@ -102,15 +102,15 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           failures(name) = failures.getOrElse(name, 0) + 1
       }
-      // measurement hygiene (round 16): several operators persist bounded
-      // intermediates with session lifetime (the graft-wide convention —
-      // Stats scaladoc says long-lived sessions clear between batches, and
-      // this loop is exactly that). Without this, run 2+ of a query — and
-      // any later query sharing a canonically-equal subplan — silently
-      // reads run 1's cache instead of the parquet inputs, which the
-      // optimization contract forbids. Clearing sits OUTSIDE the timed
-      // region: every timing now computes from source.
+      // measurement hygiene, OUTSIDE the timed region: without
+      // clearCache() run 2+ of a query — and any later query sharing a
+      // canonically-equal subplan — silently reads run 1's persisted
+      // intermediates instead of the parquet inputs. Layout.pin's
+      // checkpoints are not cache entries and would pile up across the
+      // suite until the ContextCleaner reaches them, so every persistent
+      // RDD is unpersisted too.
       spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     }
     val succeeded = names.filter { case (k, _) => timings.contains(k) }
     def jsonMapOf(m: collection.Map[String, Vector[Double]], f: Vector[Double] => Double): String =

@@ -110,10 +110,12 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // session-lifetime caches (pinned bounded intermediates) would
-      // otherwise accumulate across all 151 dumps — the documented
-      // clear-between-batches convention, as in Bench (round 16)
+      // session caches and Layout.pin's checkpoints would otherwise
+      // accumulate across all 151 dumps — release both between queries,
+      // as Bench does (pins are not cache entries, so clearCache() alone
+      // misses them)
       spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

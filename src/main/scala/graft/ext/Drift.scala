@@ -21,13 +21,16 @@ import org.apache.spark.sql.functions._
   * per-source totals broadcast (|sources| rows), so the term computation is
   * shuffle-free after the count pass.
   *
-  * Cache lifetime: the persisted intermediates back the LAZY frame each
-  * operator returns, so they cannot be unpersisted here — they live until
-  * the session ends or the caller releases them. The frames are bounded
-  * (vocab/spine-sized, never corpus-sized) and MEMORY_AND_DISK evicts under
-  * pressure, but a long-lived session issuing many calls should
-  * `spark.catalog.clearCache()` between batches (or materialize the result
-  * and drop it) — the convention for every persisting operator in graft.
+  * Pin lifetime: the intermediates are materialized by
+  * [[graft.ops.Layout.pin]] (an eager `localCheckpoint`) when the operator
+  * is CALLED, and the LAZY frame each operator returns reads them as a
+  * plan leaf. They are not CacheManager entries: `clearCache()` does not
+  * release them and no other query reuses them. Their blocks (bounded —
+  * vocab/spine-sized, never corpus-sized; MEMORY_AND_DISK) live while the
+  * returned frame is reachable and `ContextCleaner` frees them after that;
+  * a long-lived session that wants them gone at a batch boundary
+  * unpersists `sparkContext.getPersistentRDDs` — the convention for every
+  * pinning operator in graft.
   */
 object Drift {
 
@@ -462,7 +465,7 @@ object Drift {
       tsCol: String = "ts"): DataFrame = {
     // persisted: the spine's min/max pass and the fill join both consume
     // this frame, and stage reuse does NOT deduplicate the two consumers
-    // (measured: without the persist the plan scans events twice — the
+    // (measured: without the pin the plan scans events twice — the
     // same finding as Collocations' count table). Bounded at series × days.
     val daily = events
       .groupBy(col(seriesCol).as("series"), to_date(col(tsCol)).as("day"))

@@ -157,10 +157,17 @@ object Percentiles {
     * source pass and three jobs total, not per column. See [[exactGrid]]
     * for the algorithm and the exactness argument; column names must be
     * distinct.
+    *
+    * `maxCollectCells` bounds the driver: when the buckets holding the
+    * requested ranks hold at most that many grid rows in total, job 3
+    * collects them and reads the ranks on the driver; above it the ranks
+    * are read by the bucket-parallel window instead (same values, no
+    * driver collect).
     */
   private[graft] def exactGridValuesAll(df: DataFrame,
       pcts: Seq[(String, Seq[Double])],
-      maxGridCells: Long = 50000000L): Map[String, Option[Seq[Double]]] = {
+      maxGridCells: Long = 50000000L,
+      maxCollectCells: Long = 4000000L): Map[String, Option[Seq[Double]]] = {
     import org.apache.spark.sql.expressions.Window
     require(maxGridCells > 0, s"maxGridCells must be positive: $maxGridCells")
     val names = pcts.map(_._1)
@@ -261,7 +268,7 @@ object Percentiles {
           needB(c).map(b => subs((c, b.toInt))._2)
         }.sum
         val byRank: Map[(String, Long), Double] =
-          if (needCells <= 4000000L) {
+          if (needCells <= maxCollectCells) {
             // job 3, common case (from cache): collect just the needed
             // buckets — ~cells/nb grid rows each on value-spread data —
             // and read the ranks off a driver-local cumulative walk. No

@@ -31,6 +31,41 @@ object Layout {
       .mode("overwrite")
       .parquet(path)
 
+  /** Materialize a bounded intermediate once and cut its lineage: an
+    * eager `localCheckpoint`. For intermediates that several branches of
+    * one downstream plan read (drift/ranking/triangle families, the Dedup
+    * candidate and shingle frames).
+    *
+    *  - Eager: construction runs one Spark job, at CALL time, before the
+    *    caller's frame exists. Operators that pin therefore run jobs while
+    *    they are being built, not only when their result is executed.
+    *  - Why materialize: the consumer branches' stages run concurrently,
+    *    and without one prior compute each branch recomputes the whole
+    *    upstream (measured 2–4× duplicate source scans/tokenizations on a
+    *    cold run).
+    *  - Why a lineage cut and not `persist`: the returned frame's logical
+    *    plan is a single `LogicalRDD` leaf (`Scan ExistingRDD`). A
+    *    persisted frame stays in every downstream plan as an
+    *    `InMemoryTableScan` that prints its whole cached plan as an inner
+    *    child, nested pins multiply that text (e94's five nested pins
+    *    rendered to 25.2M characters), and AQE renders the executed plan
+    *    again after every query stage.
+    *  - Lifetime: the rows are NOT a CacheManager entry, so no later query
+    *    silently substitutes them for a matching subplan and
+    *    `spark.catalog.clearCache()` does not release them. The blocks
+    *    live while the returned frame, or a plan built on it, is
+    *    reachable; `ContextCleaner` frees them after that. A long-lived
+    *    session that wants them gone at a batch boundary unpersists
+    *    `sparkContext.getPersistentRDDs` (as `graft.Bench` and
+    *    `graft.Verify` do between queries).
+    *  - Storage level: MEMORY_AND_DISK, the localCheckpoint default. A
+    *    block lost with its executor cannot be recomputed (there is no
+    *    lineage to replay), so a later job reading it fails — the same
+    *    trade Curate's stage checkpoints and PageRank's iteration
+    *    checkpoints make.
+    */
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
   /** Round-robin repartition iff the frame plans FEWER partitions than
     * `target` (default: the cluster's parallelism) — repairs compute
     * parallelism over under-split inputs. A parquet file with a single row
@@ -44,23 +79,6 @@ object Layout {
     * partitions >> cores and is left untouched — the check makes this a
     * no-op exactly where the repartition would be pure waste.
     */
-  /** Persist AND eagerly materialize a bounded intermediate consumed by
-    * several branches of one downstream job (round 16). `persist` alone
-    * does not protect a COLD run: the consumer branches' stages are
-    * scheduled concurrently, and every task that reaches a cache partition
-    * before it is stored recomputes the whole upstream — measured as
-    * 2–4× duplicate source scans/tokenizations on the drift/ranking/
-    * triangle families once the bench stopped carrying caches across runs.
-    * The one eager count guarantees exactly one upstream compute; the cache
-    * keeps the graft session-lifetime convention (the bench clears between
-    * timings, pipelines clear between batches).
-    */
-  def pin(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
-  }
-
   def repairScanParallelism(df: DataFrame, target: Int = 0): DataFrame = {
     val t = if (target > 0) target
       else df.sparkSession.sparkContext.defaultParallelism

@@ -28,12 +28,15 @@ import org.apache.spark.sql.functions._
   * Each operator ships a GENERATED DuckDB mirror (the Profile.profileSql
   * pattern) so formula and constants cannot drift between engines.
   *
-  * Cache lifetime: operators that persist a bounded intermediate (the
-  * marginal/count tables behind chiSquare, mutualInfo, cohenKappa, ksTest)
-  * return LAZY frames over that cache, so they cannot unpersist it
-  * themselves; it lives until the session ends or the caller clears it.
-  * Long-lived sessions should `spark.catalog.clearCache()` between batches
-  * — the graft-wide convention (see Drift's scaladoc).
+  * Lifetime of materialized intermediates: chiSquare, mutualInfo and
+  * cohenKappa pin their cell tables ([[Layout.pin]], eager at call time)
+  * and return LAZY frames that read them as a plan leaf; the blocks live
+  * while the returned frame is reachable — the graft-wide convention (see
+  * Drift's scaladoc). The rank-grid family (ksTest, aucBinary, rocPoints,
+  * spearman) instead PERSISTS its grid cells (the guarded count is their
+  * first materialization); that cache is a CacheManager entry, lives until
+  * the session ends, and a long-lived session should
+  * `spark.catalog.clearCache()` between batches.
   */
 object Stats {
 

@@ -46,7 +46,7 @@ class CollocationsSpec extends AnyFunSuite {
     val b = Collocations.pmiBigrams(docs.repartition(7), minCount = 5L, topK = 50).collect()
     assert(a.toSeq == b.toSeq, "PMI output changed under repartitioning")
     // one corpus scan: the four consumers of the vocab-sized count table
-    // must read its cached relation — without the persist, AQE stage reuse
+    // must read its materialized leaf — without the pin, AQE stage reuse
     // deduplicates only one branch and the corpus is scanned four times
     val df = Collocations.pmiBigrams(docs)
     df.collect()
@@ -61,8 +61,10 @@ class CollocationsSpec extends AnyFunSuite {
       case other => other.children.map(scansIn).sum
     }
     val plan = df.queryExecution.executedPlan
-    assert(plan.toString.contains("InMemoryTableScan"),
-      s"count table not cached:\n$plan")
+    // the count table is read from a materialized leaf (Layout.pin's
+    // checkpoint), not recomputed from the corpus
+    assert(plan.toString.contains("Scan ExistingRDD"),
+      s"count table not read from a materialized leaf:\n$plan")
     val scans = scansIn(plan)
     assert(scans <= 1, s"corpus scanned $scans times in the executed tree:\n$plan")
   }

@@ -53,6 +53,26 @@ class SketchSpec extends AnyFunSuite {
     assert(Percentiles.exact(empty, Seq("v" -> Seq(0.5))).head().isNullAt(0))
   }
 
+  test("exactGrid's window fallback reads the same doubles as its driver collect") {
+    import spark.implicits._
+    // maxCollectCells = 0 forces the bucket-parallel window branch
+    val pcts = Seq("l_quantity" -> Seq(0.0, 0.25, 0.5, 0.9, 1.0),
+      "l_extendedprice" -> Seq(0.1, 0.5, 0.75))
+    val tied = ((Seq.fill(7)(1.0) ++ Seq.fill(3)(2.0) ++ Seq(5.5))
+      .map(v => Tuple1(Option(v))) :+ Tuple1(Option.empty[Double])).toDF("v")
+    Seq(li -> pcts, tied -> Seq("v" -> Seq(0.0, 0.3, 0.65, 0.95, 1.0)))
+      .foreach { case (df, ps) =>
+        val collected = Percentiles.exactGridValuesAll(df, ps)
+        val windowed = Percentiles.exactGridValuesAll(df, ps, maxCollectCells = 0L)
+        ps.foreach { case (c, _) =>
+          val (a, b) = (collected(c).get, windowed(c).get)
+          assert(a.map(java.lang.Double.doubleToRawLongBits) ==
+            b.map(java.lang.Double.doubleToRawLongBits),
+            s"$c: collect $a vs window $b")
+        }
+      }
+  }
+
   test("exactGrid refuses a frame above its grid-cell guard") {
     intercept[IllegalArgumentException] {
       Percentiles.exactGrid(li, Seq("l_extendedprice" -> Seq(0.5)),

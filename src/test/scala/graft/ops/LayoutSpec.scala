@@ -82,6 +82,19 @@ class LayoutSpec extends AnyFunSuite {
     assert(Layout.saltedJoin(big, small, "k", 4, joinType = "semi").count() == 1)
   }
 
+  test("pin keeps the rows, cuts the lineage to one leaf and adds no cache entry") {
+    import spark.implicits._
+    val src = (1 to 1000).map(i => (i.toLong, i % 7)).toDF("k", "g")
+      .groupBy(col("g")).agg(count(lit(1)).as("n"), sum("k").as("s"))
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val pinned = Layout.pin(src)
+    assert(pinned.collect().toSet == src.collect().toSet)
+    val analyzed = pinned.queryExecution.analyzed
+    assert(analyzed.children.isEmpty, s"pinned plan is not a leaf:\n$analyzed")
+    assert(cacheManager.isEmpty, "pin registered a CacheManager entry")
+  }
+
   test("zValue interleaves bits (Morton order on a known grid)") {
     import spark.implicits._
     val df = Seq((0L, 0L), (1L, 0L), (0L, 1L), (1L, 1L), (2L, 3L))

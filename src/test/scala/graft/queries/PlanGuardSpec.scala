@@ -58,6 +58,13 @@ class PlanGuardSpec extends AnyFunSuite {
       // q36: the 1-row max-revenue frame broadcast as the Q15 scalar gate
       "q36_q15topsupp")
 
+  // AQE renders the executed plan again after every query stage (the SQL
+  // UI update), so a plan whose text runs to millions of characters costs
+  // more driver time than the query itself. e94 once rendered 24.8M
+  // characters, its pins nesting cached plans inside InMemoryTableScans;
+  // at sf0.001 the largest plan (PageRank's) renders to ~0.32M.
+  private val maxPlanChars = 1000000
+
   test("no declared query plans a CartesianProduct; BNLJ only where designed") {
     val offenders = scala.collection.mutable.ArrayBuffer[String]()
     graft.SparkEntry.queries.foreach { case (name, run) =>
@@ -66,6 +73,8 @@ class PlanGuardSpec extends AnyFunSuite {
         offenders += s"$name: CartesianProduct"
       if (plan.contains("BroadcastNestedLoopJoin") && !bnljByDesign(name))
         offenders += s"$name: unexpected BroadcastNestedLoopJoin"
+      if (plan.length > maxPlanChars)
+        offenders += s"$name: executed plan renders to ${plan.length} characters"
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
